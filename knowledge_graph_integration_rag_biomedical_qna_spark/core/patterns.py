@@ -100,11 +100,25 @@ class AliasIndex:
     costs two set probes instead of three string joins. Build once per
     dictionary and ship via SparkContext broadcast (executors share one copy).
     Matching semantics are identical to probing the flat key set.
+
+    `candidates` maps each alias_key to its (cui, alias, prior) dictionary
+    rows — what core.linking.resolve ranks — so the extraction pass can link
+    its mentions without a join. Built by `from_alias_rows`; None on an index
+    made from bare keys (matching only).
     """
 
-    __slots__ = ("singles", "multi_first", "_by_len")
+    __slots__ = ("singles", "multi_first", "_by_len", "candidates")
 
-    def __init__(self, alias_keys):
+    @classmethod
+    def from_alias_rows(cls, rows) -> "AliasIndex":
+        """Index over (alias_key, cui, alias, prior) dictionary rows."""
+        cands: dict[str, list[tuple[str, str, float]]] = {}
+        for key, cui, alias, prior in rows:
+            cands.setdefault(key, []).append((cui, alias, float(prior)))
+        return cls(cands, {k: tuple(v) for k, v in cands.items()})
+
+    def __init__(self, alias_keys, candidates=None):
+        self.candidates = candidates
         alias_keys = tuple(alias_keys)  # guard: __init__ iterates twice
         self.singles: frozenset[str] = frozenset(k for k in alias_keys if " " not in k)
         multi: dict[str, list[tuple[tuple[str, ...], str]]] = {}

@@ -45,22 +45,24 @@ def canonicalize_nodes(resolved_mentions: DataFrame, salt_buckets: int = CANON_S
     )
 
 
-def canonicalize_node_stats(mention_stats: DataFrame, resolution: DataFrame) -> DataFrame:
-    """kg_nodes from VOCABULARY-SIZED per-(alias_key, surface) mention counts
-    — value-identical to `canonicalize_nodes` over row-level resolved
-    mentions (counts sum; surface sets union), but the transcript-sized work
-    already collapsed in the map-side-combined count aggregate, so no salting
-    is needed here and no second pass over the mention rows happens at all.
-    This is the 10^12-turn path used by plans.pipeline.build_kg;
+def aggregate_nodes(unified: DataFrame) -> DataFrame:
+    """kg_nodes from a linked extraction (operators.extraction): one
+    groupBy(cui) over its mention rows — collapsed 's' rows (vocab-sized per
+    task) or per-occurrence 'm' rows. Value-identical to `canonicalize_nodes`
+    over row-level resolved mentions (counts sum; surface sets union); the
+    map-side partial aggregate absorbs hot-CUI skew, so no salting is needed
+    here. This is the path used by plans.pipeline.build_kg;
     `canonicalize_nodes` remains the row-level operator (checkpointed
     per-bucket partial aggregates, tests)."""
-    joined = mention_stats.join(
-        F.broadcast(resolution.select("alias_key", "surface", "cui")),
-        ["alias_key", "surface"],
-    )
-    return joined.groupBy("cui").agg(
-        F.expr("array_sort(collect_set(surface)) AS surfaces"),
-        F.expr("sum(n_mentions) AS mention_count"),
+    from .extraction import MENTION_COUNT_SQL
+
+    return (
+        unified.filter("kind IN ('m', 's') AND cui IS NOT NULL")
+        .groupBy("cui")
+        .agg(
+            F.expr("array_sort(collect_set(surface)) AS surfaces"),
+            F.expr(f"CAST(sum({MENTION_COUNT_SQL}) AS BIGINT) AS mention_count"),
+        )
     )
 
 

@@ -427,7 +427,7 @@ def array_jaccard_verify(
     vb = doc_stats.select(
         F.col("id").alias("id_b"), F.col("n").alias("n_b"), F.col("hs").alias("hs_b")
     )
-    return (
+    scored = (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("n_inter", F.size(F.array_intersect("hs_a", "hs_b")).cast("bigint"))
@@ -435,9 +435,12 @@ def array_jaccard_verify(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
+    if threshold <= 0:
+        # jaccard >= threshold keeps disjoint pairs here, which jaccard_verify's
+        # inner join on a shared shingle never yields
+        scored = scored.filter("n_inter > 0")
+    return scored.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
 def jaccard_verify(

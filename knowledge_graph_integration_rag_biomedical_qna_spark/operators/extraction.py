@@ -5,7 +5,10 @@ stateless, NO shuffle (they inherit the conv_id partitioning from stage [1]).
 The alias-key dictionary is shipped once per executor as a SparkContext
 broadcast (the reference instead held article dictionaries in driver RAM,
 rag2-filtering/filtering_module.py:44,62 — here the dictionary rides the
-broadcast bus and the data never visits the driver).
+broadcast bus and the data never visits the driver). The broadcast also
+carries each key's link candidates, so the unified passes (extract_all_df,
+extract_collapsed_df) link their mentions and triple endpoints in-task
+(stages [4]+[5]) and emit the cuis with the rows.
 
 Reference analogs:
 - sentence split: rag2-retriever/query_encode.py:10-48 (scispacy .sents)
@@ -55,10 +58,75 @@ _MENTION_COLS = list(MENTIONS_SCHEMA.fieldNames())
 _TRIPLE_COLS = list(RAW_TRIPLES_SCHEMA.fieldNames())
 
 
+def _linker(index):
+    """Per-task memo over core.linking.resolve: (alias_key, surface) -> the
+    accepted cui, or None. Each distinct pair is resolved once per task."""
+    from ..core.linking import resolve
+
+    cands = index.candidates
+    if cands is None:
+        raise ValueError(
+            "alias index carries no link candidates: build it with "
+            "plans.pipeline.broadcast_alias_keys or AliasIndex.from_alias_rows"
+        )
+    memo: dict = {}
+
+    def link(key, surface):
+        try:
+            return memo[key, surface]
+        except KeyError:
+            hit = resolve(surface, cands.get(key, ()))
+            cui = memo[key, surface] = None if hit is None else hit[0]
+            return cui
+
+    return link
+
+
+def _link_pairs(keys, surfaces, link):
+    """cui per row of two parallel string arrays (null where the key is
+    null, which has no candidates): `link` runs once per distinct
+    (key, surface) of the batch and Arrow `take` maps the results back onto
+    the rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    kd = pc.dictionary_encode(keys)
+    sd = pc.dictionary_encode(surfaces)
+    kv = [None, *kd.dictionary.to_pylist()]
+    sv = [None, *sd.dictionary.to_pylist()]
+    # code 0 in either position stands for a null entry
+    code = (pc.fill_null(kd.indices, -1).to_numpy().astype(np.int64) + 1) * len(sv) + (
+        pc.fill_null(sd.indices, -1).to_numpy() + 1
+    )
+    uniq, inv = np.unique(code, return_inverse=True)
+    cuis = [link(kv[c // len(sv)], sv[c % len(sv)]) for c in uniq.tolist()]
+    return pa.array(cuis, pa.string()).take(pa.array(inv))
+
+
+def _with_links(rb, link):
+    """Append the in-pass links: `cui` on mention ('m'/'s') rows,
+    `subj_cui`/`obj_cui` on triple rows (UNIFIED_SCHEMA order)."""
+    import pyarrow as pa
+
+    n = len(rb)
+    ends = _link_pairs(
+        pa.concat_arrays([rb.column("subj_key"), rb.column("obj_key")]),
+        pa.concat_arrays([rb.column("subj_surface"), rb.column("obj_surface")]),
+        link,
+    )
+    return pa.RecordBatch.from_arrays(
+        [*rb.columns, _link_pairs(rb.column("alias_key"), rb.column("surface"), link),
+         ends.slice(0, n), ends.slice(n)],
+        names=_UNIFIED_COLS,
+    )
+
+
 def _unified_batches_fn(alias_keys_bc, kind: str | None = None, cols: list | None = None):
     """mapInArrow body: RecordBatch in -> unified RecordBatches out, with an
     optional in-pass kind filter + column projection (Arrow kernels, no
-    pandas)."""
+    pandas). Without a projection the rows keep every UNIFIED_SCHEMA column,
+    the in-pass links included."""
 
     def fn(batches):
         import pyarrow.compute as pc
@@ -66,6 +134,7 @@ def _unified_batches_fn(alias_keys_bc, kind: str | None = None, cols: list | Non
         from ..core.vectorized import extract_unified_batches
 
         keys = alias_keys_bc.value
+        link = _linker(keys) if cols is None else None
         for batch in batches:
             for rb in extract_unified_batches(
                 batch.column("conv_id"), batch.column("turn_idx"),
@@ -73,8 +142,7 @@ def _unified_batches_fn(alias_keys_bc, kind: str | None = None, cols: list | Non
             ):
                 if kind is not None:
                     rb = rb.filter(pc.equal(rb.column("kind"), kind))
-                if cols is not None:
-                    rb = rb.select(cols)
+                rb = _with_links(rb, link) if cols is None else rb.select(cols)
                 if len(rb):
                     yield rb
 
@@ -121,17 +189,24 @@ UNIFIED_SCHEMA = T.StructType(
         T.StructField("obj_surface", T.StringType(), True),
         T.StructField("obj_key", T.StringType(), True),
         T.StructField("confidence", T.DoubleType(), True),
+        # in-pass links (core.linking.resolve; null = no accepted candidate):
+        # `cui` on 'm'/'s' rows, the endpoint cuis on 't' rows
+        T.StructField("cui", T.StringType(), True),
+        T.StructField("subj_cui", T.StringType(), True),
+        T.StructField("obj_cui", T.StringType(), True),
     ]
 )
 
 _UNIFIED_COLS = list(UNIFIED_SCHEMA.fieldNames())
+_KERNEL_COLS = _UNIFIED_COLS[:-3]  # what core.vectorized emits, before the links
 
 
 def extract_all_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     """Stages [2]+[3] in ONE Arrow pass: each turn's text is sentence-split,
     tokenized, and dictionary-matched exactly once; mention rows (kind='m')
-    and triple rows (kind='t') share the output. Downstream callers split
-    with a filter — persist the result so both branches reuse the pass.
+    and triple rows (kind='t') share the output, linked in-pass (`cui`,
+    `subj_cui`, `obj_cui`). Downstream callers split with a filter — persist
+    the result so both branches reuse the pass.
 
     The kernel is the VECTORIZED pandas/numpy path (core.vectorized): C-regex
     tokenization over whole Arrow batches + hash-join dictionary probes, with
@@ -165,6 +240,11 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     partials — bit-identical counts to the full path (parity-tested in
     test_pipeline_parity), with the transcript-sized mention traffic gone.
 
+    The same pass links: 's' rows carry `cui` and 't' rows `subj_cui` /
+    `obj_cui` (null where no candidate clears the floor), resolved through
+    core.linking.resolve once per distinct (alias_key, surface) of the task,
+    so the KG outputs need no linking stage and no join downstream.
+
     Callers needing per-occurrence mention rows (tok spans) run
     `extract_all_df` instead — build_kg keeps its `.mentions` view lazily on
     that path."""
@@ -177,6 +257,7 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
         from ..core.vectorized import extract_unified_batches
 
         keys = alias_keys_bc.value
+        link = _linker(keys)
         partials = []
         for batch in batches:
             for rb in extract_unified_batches(
@@ -186,7 +267,7 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
                 is_t = pc.equal(rb.column("kind"), "t")
                 t_rb = rb.filter(is_t)
                 if len(t_rb):
-                    yield t_rb
+                    yield _with_links(t_rb, link)
                 m_tbl = pa.Table.from_batches([rb.filter(pc.invert(is_t))]).select(
                     ["alias_key", "surface"]
                 )
@@ -204,7 +285,7 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
             )
             n = len(agg)
             zeros = pa.array(np.zeros(n, dtype=np.int32))
-            yield pa.RecordBatch.from_arrays(
+            yield _with_links(pa.RecordBatch.from_arrays(
                 [
                     pa.array([""] * n, pa.string()),                    # conv_id
                     zeros,                                              # turn_idx
@@ -222,8 +303,8 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
                     pa.nulls(n, pa.string()),                           # obj_key
                     pa.nulls(n, pa.float64()),                          # confidence
                 ],
-                names=_UNIFIED_COLS,
-            )
+                names=_KERNEL_COLS,
+            ), link)
 
     # plan-level marker: mentions_view raises on a collapsed input instead of
     # silently returning zero rows (there are no 'm' rows to project)
@@ -234,16 +315,23 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     )
 
 
+# mentions a unified row stands for: an 's' row carries its per-task partial
+# count in mention_idx, an 'm' row is one occurrence
+MENTION_COUNT_SQL = "CASE WHEN kind = 's' THEN mention_idx ELSE 1 END"
+
+
 def mention_stats_view(unified_collapsed: DataFrame) -> DataFrame:
     """(alias_key, surface, n_mentions) from a collapsed extraction: sum the
     per-task partial counts (kind='s' rows carry them in mention_idx). Counts
-    equal the full path's COUNT(*) over per-occurrence rows exactly."""
+    equal the full path's COUNT(*) over per-occurrence rows exactly, and a
+    full (extract_all_df) extraction gives that COUNT(*) through the same
+    formula."""
     from pyspark.sql import functions as F
 
     return (
-        unified_collapsed.filter("kind = 's'")
+        unified_collapsed.filter("kind IN ('m', 's')")
         .groupBy("alias_key", "surface")
-        .agg(F.expr("CAST(sum(mention_idx) AS BIGINT) AS n_mentions"))
+        .agg(F.expr(f"CAST(sum({MENTION_COUNT_SQL}) AS BIGINT) AS n_mentions"))
     )
 
 
@@ -321,6 +409,18 @@ def mentions_view(unified: DataFrame) -> DataFrame:
         "surface", "alias_key",
         "CAST(tok_start AS INT) AS tok_start",
         "CAST(tok_end AS INT) AS tok_end",
+    )
+
+
+def edges_view(unified: DataFrame) -> DataFrame:
+    """kg_edges: the triple rows whose two endpoints were linked in-pass,
+    projected to evidence-level CUI edges (provenance kept). Triples with an
+    unlinked endpoint are dropped, as in the oracle."""
+    return unified.filter(
+        "kind = 't' AND subj_cui IS NOT NULL AND obj_cui IS NOT NULL"
+    ).selectExpr(
+        "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui",
+        "subj_surface", "obj_surface", "confidence",
     )
 
 

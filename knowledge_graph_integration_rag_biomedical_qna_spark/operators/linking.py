@@ -1,4 +1,13 @@
-"""Stages [4]+[5] — entity-link candidate generation and scoring.
+"""Stages [4]+[5] as Spark operators — entity-link candidate generation and
+scoring.
+
+plans.pipeline.build_kg does not run these: its extraction pass links each
+distinct (alias_key, surface) in-task through core.linking.resolve against
+the broadcast dictionary (operators.extraction). The Spark tables here serve
+the question linker (plans.query), the checkpointed runner
+(plans.checkpoint) and the streaming path (streaming.ingest), back
+build_kg's lazy `candidates`/`resolution` views, and are the reference the
+in-pass linker is tested against (tests/test_pipeline_parity.py).
 
 Dataflow (reference shape: retrieve -> rerank -> threshold,
 rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
@@ -13,9 +22,9 @@ rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
 4. per-surface top-k window with pinned tie-breaks (T1), top-1 + floor
    acceptance (A2 + the 0.5 cosine floor).
 
-The output `resolution` table is tiny (<= distinct surfaces) and is itself
-broadcast back against mentions/triples — so stages [4]-[6] add ZERO shuffles
-over the transcript-sized tables.
+The output `resolution` table is tiny (<= distinct surfaces); the paths that
+use it broadcast it back against their mentions/triples, so no
+transcript-sized table is shuffled for linking.
 """
 
 from __future__ import annotations

@@ -2,61 +2,72 @@
 
 Shuffle budget of the whole plan (the thing that decides 100 TB viability):
 
-  1 shuffle   stage [1] window over (conv_id, turn_idx)          [data-sized]
-  0 shuffles  stages [2]-[3] mapInPandas (inherit partitioning)
-  1 shuffle   mention_stats groupBy(alias_key, surface)          [count payload;
-              map-side combine absorbs hot-entity skew -> vocab-sized output,
-              feeds BOTH candidate generation and node canonicalization]
-  0 shuffles  resolution joins (resolution table is broadcast)
-  1 tiny      stage [6] groupBy(cui) over vocab-sized stats      [<= |vocab| rows]
-  1 shuffle   edge-stats groupBy (counter payload, map-side combine)
+  1 shuffle   stage [1] repartition(conv_id) for the turn window   [data-sized;
+              0 on a bucketed input, assume_clustered=True]
+  0 shuffles  stages [2]-[5] one mapInArrow pass: extraction, the per-task
+              mention collapse AND linking (each distinct (alias_key, surface)
+              resolved once per task against the broadcast dictionary) —
+              the persisted stage boundary every output reads
+  0 joins     kg_edges is a filter + projection of the linked triple rows
+  2 shuffles  kg_edge_stats groupBy(subj_cui, pred, obj_cui)      [counter
+              payload, map-side combine absorbs hot edges; the exact
+              count(DISTINCT conv_id) adds the second, edge-sized one]
+  1 tiny      kg_nodes groupBy(cui) over the collapsed stat rows  [<= |vocab|
+              rows per task]
 
-Everything transcript-sized shuffles at most once; after the mention_stats
-aggregate no transcript-sized table is read twice (the salted row-level
-canonicalize remains in operators/ for the checkpointed per-bucket runner).
+The assembly repartition is the only exchange between the scan and the cache;
+after it nothing transcript-sized is shuffled or read twice. The Spark linking
+operators (operators.linking) build only the lazy `candidates`/`resolution`
+views here.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.canonicalize import aggregate_edges, canonicalize_node_stats
-from ..operators.extraction import extract_all_df, mentions_view, triples_view
-from ..operators.linking import candidate_table, resolution_table, resolve_triples
+from ..core.patterns import AliasIndex
+from ..operators.canonicalize import aggregate_edges, aggregate_nodes
+from ..operators.extraction import (
+    edges_view,
+    extract_all_df,
+    extract_collapsed_df,
+    mention_stats_view,
+    mentions_view,
+    triples_view,
+)
+from ..operators.linking import candidate_table, resolution_table
 from ..operators.turn_assembly import assemble_turns
+from ..session import default_parallelism
 
 
 @dataclass
 class KGResult:
     turns: DataFrame
-    unified: DataFrame       # persisted single-pass extraction (mentions+triples)
-    raw_triples: DataFrame
-    candidates: DataFrame
-    resolution: DataFrame
+    unified: DataFrame       # the linked extraction: persisted when build_kg persists
+    raw_triples: DataFrame   # every extracted triple, linked or not
     kg_edges: DataFrame      # evidence-level CUI-resolved triples (provenance kept)
     kg_edge_stats: DataFrame  # deduplicated graph edges with counters
     kg_nodes: DataFrame
-    mention_stats: DataFrame | None = None  # vocab-sized (alias_key, surface, n)
-    # per-occurrence mentions: either prebuilt, or a thunk resolved on first
-    # access (the collapsed-cache default never constructs the plan unless a
-    # consumer actually reads token spans — plan construction itself costs
-    # driver time, see build_kg docstring)
-    _mentions: DataFrame | None = None
-    _mentions_fn: object | None = None
+    # name -> thunk for the views no KG output reads (mentions, mention_stats,
+    # candidates, resolution): each plan is built on first access, uncached —
+    # plan construction itself costs driver time, see build_kg docstring
+    _views: dict = field(default_factory=dict, repr=False)
+    _built: dict = field(default_factory=dict, repr=False)
 
-    @property
-    def mentions(self) -> DataFrame:
-        if self._mentions is None:
-            self._mentions = self._mentions_fn()
-        return self._mentions
+    def _view(self, name: str) -> DataFrame:
+        if name not in self._built:
+            self._built[name] = self._views[name]()
+        return self._built[name]
+
+    mentions = property(lambda self: self._view("mentions"))
+    mention_stats = property(lambda self: self._view("mention_stats"))
+    candidates = property(lambda self: self._view("candidates"))
+    resolution = property(lambda self: self._view("resolution"))
 
     def unpersist(self) -> None:
-        for df in (self.unified, self.resolution, self.mention_stats,
-                   self._mentions):
-            if df is None:
-                continue
+        for df in (self.unified, *self._built.values()):
             try:
                 df.unpersist()
             except Exception:
@@ -77,14 +88,19 @@ class _ClosureBroadcast:
 # per-python-worker cache for file-backed dictionaries: (path, mtime) -> index
 _FILE_INDEX_CACHE: dict = {}
 
+# the dictionary columns an alias index ships: the match keys plus each key's
+# link candidates
+ALIAS_INDEX_COLS = ["alias_key", "cui", "alias", "prior"]
+
 
 class FileBackedAliasIndex:
     """Escape hatch for dictionaries too large to route through the driver:
-    the distinct alias keys are written to a parquet side-file by Spark
-    executors (never collected), and each PYTHON WORKER lazily builds the
-    AliasIndex from that file on first `.value` access, caching it per
-    (path, mtime). Pickles as just the path, so task closures stay tiny.
-    Same `.value` interface as a broadcast."""
+    the distinct (alias_key, cui, alias, prior) rows are written to a parquet
+    side-file by Spark executors (never collected), and each PYTHON WORKER
+    lazily builds the AliasIndex — keys and link candidates — from that file
+    on first `.value` access, caching it per (path, mtime). Pickles as just
+    the path, so task closures stay tiny. Same `.value` interface as a
+    broadcast."""
 
     __slots__ = ("path",)
 
@@ -95,8 +111,6 @@ class FileBackedAliasIndex:
     def value(self):
         import os
 
-        from ..core.patterns import AliasIndex
-
         key = (self.path, os.stat(self.path).st_mtime_ns)
         hit = _FILE_INDEX_CACHE.get(key)
         if hit is None:
@@ -104,17 +118,26 @@ class FileBackedAliasIndex:
 
             # path may be a single file or a multi-part parquet directory
             # (pyarrow reads both); parts are read in one dataset scan
-            keys = frozenset(
-                pq.read_table(self.path, columns=["alias_key"])
-                .column("alias_key").to_pylist()
+            tbl = pq.read_table(self.path, columns=ALIAS_INDEX_COLS)
+            hit = AliasIndex.from_alias_rows(
+                zip(*(tbl.column(c).to_pylist() for c in ALIAS_INDEX_COLS))
             )
-            hit = AliasIndex(keys)
             _FILE_INDEX_CACHE.clear()
             _FILE_INDEX_CACHE[key] = hit
         return hit
 
 
-# above this many distinct keys, stop collecting the dictionary to the driver
+def _ship(spark: SparkSession, rows):
+    """Broadcast the AliasIndex built from collected dictionary rows."""
+    idx = AliasIndex.from_alias_rows(rows)
+    try:
+        return spark.sparkContext.broadcast(idx)
+    except Exception:  # Spark Connect: no SparkContext on the client
+        return _ClosureBroadcast(idx)
+
+
+# above this many distinct dictionary rows, stop collecting the dictionary to
+# the driver
 MAX_BROADCAST_KEYS = 20_000_000
 
 
@@ -125,18 +148,18 @@ def broadcast_alias_keys(
     spill_dir: str | None = None,
 ):
     """Ship the alias dictionary to executors once as a first-token-indexed
-    AliasIndex (matcher probes two sets per token instead of joining n-grams).
-    At UMLS scale (~16M alias keys) this is a few hundred MB — broadcast
-    territory. Beyond `max_broadcast_keys`, the driver never materializes the
-    dictionary: the distinct keys are spilled to a single parquet side-file
+    AliasIndex (matcher probes two sets per token instead of joining n-grams)
+    that also carries each key's (cui, alias, prior) link candidates, so the
+    extraction pass links its own mentions. At UMLS scale (~16M alias rows)
+    this is a few hundred MB — broadcast territory. Beyond
+    `max_broadcast_keys` distinct dictionary rows, the driver never
+    materializes the dictionary: the rows are spilled to a parquet side-file
     (executor-written) and workers build the index themselves
     (FileBackedAliasIndex) — the one driver-side collect in the hot path is
     gone exactly when it would hurt. On a real cluster pass `spill_dir` on
     SHARED storage (HDFS/S3 fuse mount); the default tempdir is correct only
     for local mode."""
-    from ..core.patterns import AliasIndex
-
-    proj = aliases.select("alias_key")
+    proj = aliases.select(*ALIAS_INDEX_COLS)
     # LocalRelation fast path (r6): a dictionary built from driver-resident
     # literals (VALUES / parallelized local data the optimizer folded) never
     # needs the cluster — collect() executes driver-side with zero Spark
@@ -151,15 +174,11 @@ def broadcast_alias_keys(
     except Exception:  # Spark Connect or plan-access change
         is_local = False
     if is_local:
-        idx = AliasIndex(frozenset(r[0] for r in proj.collect()))
-        try:
-            return spark.sparkContext.broadcast(idx)
-        except Exception:  # Spark Connect: no SparkContext on the client
-            return _ClosureBroadcast(idx)
+        return _ship(spark, proj.collect())
 
     distinct = proj.distinct()
     # size probe: one limit(1M+1)+collect detects-and-fetches dictionaries up
-    # to 1M keys (~tens of MB — harmless) in a single job, which is the
+    # to 1M rows (~tens of MB — harmless) in a single job, which is the
     # overwhelmingly common case. Only when the probe overflows does a
     # distributed count() decide broadcast-vs-spill, so the driver never
     # receives max_broadcast_keys(=20M) rows just to notice there are too
@@ -167,13 +186,9 @@ def broadcast_alias_keys(
     probe_cap = min(max_broadcast_keys, 1_000_000)
     probe = distinct.limit(probe_cap + 1).collect()
     if len(probe) <= probe_cap:
-        idx = AliasIndex(frozenset(r[0] for r in probe))
-        try:
-            return spark.sparkContext.broadcast(idx)
-        except Exception:  # Spark Connect: no SparkContext on the client
-            return _ClosureBroadcast(idx)
-    n_keys = distinct.count()
-    if n_keys > max_broadcast_keys:
+        return _ship(spark, probe)
+    n_rows = distinct.count()
+    if n_rows > max_broadcast_keys:
         import os
         import tempfile
 
@@ -181,22 +196,19 @@ def broadcast_alias_keys(
 
         base = spill_dir or os.path.join(tempfile.gettempdir(), "kg_alias_spill")
         os.makedirs(base, exist_ok=True)
-        # content-addressed spill dir: (count, order-insensitive key digest)
+        # content-addressed spill dir: (count, order-insensitive row digest)
         # — rerunning with the same dictionary reuses the existing spill
         # instead of accreting uuid dirs forever
         # bit_xor: order-insensitive and can't overflow (ANSI mode)
-        digest = distinct.agg(F.expr("bit_xor(xxhash64(alias_key))")).first()[0] or 0
-        out_dir = os.path.join(base, f"keys-{n_keys}-{digest & (1 << 64) - 1:016x}")
+        cols = ", ".join(ALIAS_INDEX_COLS)
+        digest = distinct.agg(F.expr(f"bit_xor(xxhash64({cols}))")).first()[0] or 0
+        out_dir = os.path.join(base, f"aliases-{n_rows}-{digest & (1 << 64) - 1:016x}")
         if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
             # multi-part write (no coalesce(1) single-task funnel); the
             # reader scans the directory as one dataset
             distinct.write.mode("overwrite").parquet(out_dir)
         return FileBackedAliasIndex(out_dir)
-    idx = AliasIndex(frozenset(r[0] for r in distinct.collect()))
-    try:
-        return spark.sparkContext.broadcast(idx)
-    except Exception:  # Spark Connect: no SparkContext on the client
-        return _ClosureBroadcast(idx)
+    return _ship(spark, distinct.collect())
 
 
 def build_kg(
@@ -209,15 +221,24 @@ def build_kg(
     alias_index=None,
     persist_mentions: bool = False,
 ) -> KGResult:
-    """Compose stages [1]-[6].
+    """Compose stages [1]-[6]: turn assembly, then ONE mapInArrow pass that
+    extracts mentions and triples and links them (`unified`), then three
+    outputs read off it — kg_edges (filter + projection of the linked
+    triples), kg_edge_stats (aggregate_edges) and kg_nodes (one
+    groupBy(cui)). No linking stage and no join run for the outputs.
 
-    `persist=True` caches the unified extraction output plus the two
-    vocabulary-sized tables (mention_stats, resolution): without a cache
-    Catalyst re-executes the pandas-UDF extraction once per consuming subtree
-    (no cross-branch CSE) — measured 3 extraction passes instead of 1. For
-    jobs too large to cache, use plans.checkpoint.ResumableKGRun, which
-    materializes stage boundaries to storage instead (the reference's JSON
-    stage files, done right).
+    `persist=True` caches `unified` only: without a cache Catalyst
+    re-executes the Arrow extraction once per consuming subtree (no
+    cross-branch CSE). For jobs too large to cache, use
+    plans.checkpoint.ResumableKGRun, which materializes stage boundaries to
+    storage instead (the reference's JSON stage files, done right).
+
+    Lazy, uncached views — their plans are built on first access, and no KG
+    output reads them: `.mentions` (per-occurrence token spans),
+    `.mention_stats` (vocab-sized (alias_key, surface, n_mentions)),
+    `.candidates` (the Spark top-k candidate table, operators.linking) and
+    `.resolution` (its accepted top-1 links — the reference the in-pass
+    linker is tested against).
 
     `assume_clustered=True` declares the input already bucketed by conv_id
     (sources.io.write_bucketed): stage [1] skips its repartition and the
@@ -227,39 +248,32 @@ def build_kg(
 
     `collapse_mention_cache=True` (default, r5): the extraction pass emits
     per-occurrence mention rows already collapsed to per-task partial
-    (alias_key, surface, n) stats — they were ~92% of the cached unified
-    rows but are only ever re-read as the vocab-sized aggregate, so the
-    collapse removes most of the Arrow->JVM transfer, the cache build (the
-    steady pipeline's dominant phase), and the mention-stats shuffle.
+    (alias_key, surface, n, cui) stats — they were ~92% of the cached unified
+    rows but are only ever re-read as vocab-sized aggregates, so the
+    collapse removes most of the Arrow->JVM transfer and the cache build.
     kg_edges/kg_nodes/mention_stats are bit-identical either way
-    (parity-tested); `.mentions` stays per-occurrence via a LAZY uncached
-    second extraction pass — consumers of token spans pay for that pass only
-    if they actually read it (tests/tools do; the nodes+edges product never
-    does). Pass False to get the single-pass unified cache that `.mentions`
-    shares.
+    (parity-tested); `.mentions` then runs a LAZY uncached second extraction
+    pass — consumers of token spans pay for it only if they read it. Pass
+    False to cache the uncollapsed extraction that `.mentions` shares; it
+    links through the same kernel step and feeds the same edge and node
+    formulas.
 
     `persist_mentions=True` (r6, for consumers reading BOTH edges and token
     spans): forces the single-pass UNCOLLAPSED persisted cache — edges,
     nodes, mention_stats and `.mentions` all derive from ONE cached
     extraction, so reading both views runs extraction exactly once. The
-    trade is the ~12x larger cache the collapse exists to avoid; the default
-    (False) keeps the collapsed cache and the lazy second pass.
+    trade is the ~12x larger cache the collapse exists to avoid.
 
-    `alias_index`: a prebuilt broadcast_alias_keys() result. A long-lived
-    deployment ships the dictionary once, not once per job — steady-state
-    callers (bench, repeated builds against one dictionary) hoist it; the
-    default builds it here.
+    `alias_index`: a prebuilt broadcast_alias_keys() result (its value must
+    carry the link candidates). A long-lived deployment ships the dictionary
+    once, not once per job — steady-state callers (bench, repeated builds
+    against one dictionary) hoist it; the default builds it here.
 
     Driver-side plan-construction cost (r6): one warm build_kg call is ~470
     py4j round-trips / ~0.45 s with a hoisted alias_index (~0.9 s cold incl.
-    the dictionary probe+broadcast) — down from ~3,100 / 0.75-1.3 s before
-    the selectExpr/SQL-string rewrites of synth/assembly/linking/views. At
-    steady state amortize it by reusing the returned plan (see bench.py).
+    the dictionary probe+broadcast). At steady state amortize it by reusing
+    the returned plan (see bench.py).
     """
-    from pyspark.sql import functions as F
-
-    from ..operators.extraction import extract_collapsed_df, mention_stats_view
-
     if persist_mentions:
         # both views off ONE cached extraction pass — see docstring
         collapse_mention_cache = False
@@ -267,60 +281,30 @@ def build_kg(
 
     turns = assemble_turns(transcripts, assume_clustered=assume_clustered)
     keys_bc = alias_index if alias_index is not None else broadcast_alias_keys(spark, aliases)
-    # one Arrow pass over the turn text produces BOTH mentions and triples;
-    # the persisted unified table is the stage boundary both branches reuse
-    if collapse_mention_cache:
-        unified = extract_collapsed_df(turns, keys_bc)
-    else:
-        unified = extract_all_df(turns, keys_bc)
+    extract = extract_collapsed_df if collapse_mention_cache else extract_all_df
+    unified = extract(turns, keys_bc)
     if persist:
         unified = unified.persist()
-    raw_triples = triples_view(unified)
+    kg_edges = edges_view(unified)
 
-    if collapse_mention_cache:
-        # per-occurrence view: a LAZY uncached second extraction pass, built
-        # only if a consumer reads .mentions (plan construction deferred too)
-        mentions_fn = lambda: mentions_view(extract_all_df(turns, keys_bc))  # noqa: E731
-        # vocab-sized already: sum the per-task partials
-        mention_stats = mention_stats_view(unified)
-    else:
-        mentions_fn = lambda: mentions_view(unified)  # noqa: E731
-        # ONE transcript-sized aggregate collapses mentions to
-        # vocabulary-sized (alias_key, surface, n) — map-side combine
-        # absorbs hot-entity skew. It feeds BOTH candidate generation and
-        # node canonicalization, so the mention rows are never re-read
-        # after this pass.
-        mention_stats = (
-            mentions_view(unified)
-            .groupBy("alias_key", "surface")
-            .agg(F.expr("count(1) AS n_mentions"))
-        )
-    if persist:
-        mention_stats = mention_stats.persist()
-
-    from ..session import default_parallelism
-
-    default_par = default_parallelism(spark)
-    candidates = candidate_table(
-        mention_stats.select("alias_key", "surface"), aliases,
-        score_partitions=default_par // 16 or 1,
-    )
-    resolution = resolution_table(candidates)
-    if persist:
-        resolution = resolution.persist()
-
-    kg_edges = resolve_triples(raw_triples, resolution)
-    kg_nodes = canonicalize_node_stats(mention_stats, resolution)
-    kg_edge_stats = aggregate_edges(kg_edges)
-    return KGResult(
+    kg = KGResult(
         turns=turns,
         unified=unified,
-        _mentions_fn=mentions_fn,
-        raw_triples=raw_triples,
-        candidates=candidates,
-        resolution=resolution,
+        raw_triples=triples_view(unified),
         kg_edges=kg_edges,
-        kg_edge_stats=kg_edge_stats,
-        kg_nodes=kg_nodes,
-        mention_stats=mention_stats,
+        kg_edge_stats=aggregate_edges(kg_edges),
+        kg_nodes=aggregate_nodes(unified),
     )
+    kg._views.update(
+        # the collapsed cache holds no per-occurrence rows: a second pass
+        mentions=lambda: mentions_view(
+            extract_all_df(turns, keys_bc) if collapse_mention_cache else unified
+        ),
+        mention_stats=lambda: mention_stats_view(unified),
+        candidates=lambda: candidate_table(
+            kg.mention_stats.select("alias_key", "surface"), aliases,
+            score_partitions=default_parallelism(spark) // 16 or 1,
+        ),
+        resolution=lambda: resolution_table(kg.candidates),
+    )
+    return kg

@@ -319,11 +319,11 @@ def test_persist_mentions_single_extraction_pass(spark, fixture_dir, tmp_path):
 
     transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
     aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
-    keys = [r["alias_key"] for r in aliases.select("alias_key").distinct().collect()]
+    rows = aliases.select("alias_key", "cui", "alias", "prior").collect()
 
     def run(tag, **kwargs):
         path = tmp_path / f"accesses_{tag}.log"
-        idx = CountingAliasIndex(keys, path)
+        idx = CountingAliasIndex(rows, path)
         kg = build_kg(spark, transcripts, aliases, alias_index=idx, **kwargs)
         n_edges = kg.kg_edges.count()
         n_mentions = kg.mentions.count()
@@ -336,6 +336,24 @@ def test_persist_mentions_single_extraction_pass(spark, fixture_dir, tmp_path):
     # default: one collapsed pass (edges) + one lazy full pass (mentions);
     # persist_mentions: both views read the single cached full pass
     assert n_default == 2 * n_shared, (n_default, n_shared)
+
+
+def test_uncollapsed_cache_gives_same_kg(spark, fixture_dir):
+    """persist_mentions=True links the uncollapsed extraction through the
+    same kernel step and feeds the same edge, node and mention-stat
+    formulas: every table equals the collapsed default's."""
+    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
+    full = build_kg(spark, transcripts, aliases, persist_mentions=True)
+    collapsed = build_kg(spark, transcripts, aliases)
+    try:
+        for name in ("kg_edges", "kg_edge_stats", "kg_nodes", "mention_stats"):
+            a = sorted(map(repr, getattr(full, name).collect()))
+            b = sorted(map(repr, getattr(collapsed, name).collect()))
+            assert a == b and a, name
+    finally:
+        full.unpersist()
+        collapsed.unpersist()
 
 
 def test_mentions_view_raises_on_collapsed_input(spark, fixture_dir):
@@ -359,3 +377,101 @@ def test_mentions_view_raises_on_collapsed_input(spark, fixture_dir):
     collapsed = extract_collapsed_df(assemble_turns(transcripts), bc)
     with _pytest.raises(ValueError, match="COLLAPSED"):
         mentions_view(collapsed)
+
+
+def _in_pass_links_match_spark_resolution(spark, transcripts, aliases) -> dict:
+    """Every (alias_key, surface) -> cui link the extraction pass made, on
+    stat rows and on both triple endpoints, checked against the Spark
+    reference resolution_table(candidate_table(...)); returns the links."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
+        extract_collapsed_df,
+        mention_stats_view,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+        candidate_table,
+        resolution_table,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.turn_assembly import (
+        assemble_turns,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        broadcast_alias_keys,
+    )
+
+    unified = extract_collapsed_df(
+        assemble_turns(transcripts), broadcast_alias_keys(spark, aliases)
+    ).persist()
+    try:
+        got: dict = {}
+        for r in unified.collect():
+            if r["kind"] == "s":
+                ends = [(r["alias_key"], r["surface"], r["cui"])]
+            else:
+                ends = [(r["subj_key"], r["subj_surface"], r["subj_cui"]),
+                        (r["obj_key"], r["obj_surface"], r["obj_cui"])]
+            for key, surface, cui in ends:
+                assert got.setdefault((key, surface), cui) == cui, (key, surface)
+        want = {
+            (r["alias_key"], r["surface"]): r["cui"]
+            for r in resolution_table(candidate_table(
+                mention_stats_view(unified).select("alias_key", "surface"), aliases
+            )).collect()
+        }
+    finally:
+        unified.unpersist()
+    assert got and got == {k: want.get(k) for k in got}
+    return got
+
+
+def test_in_pass_linker_matches_spark_resolution(spark, fixture_dir):
+    """The cui the extraction pass attaches to each (alias_key, surface)
+    equals the Spark candidate/resolution tables' top-1 accepted link, on the
+    fixture dictionary and on hand-built tie and floor cases."""
+    import datetime as dt
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.linking import link_score
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
+        ALIASES_SCHEMA,
+        TRANSCRIPTS_SCHEMA,
+    )
+
+    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
+    assert any(_in_pass_links_match_spark_resolution(spark, transcripts, aliases).values())
+
+    # (alias_key, alias, cui, prior)
+    rows = [
+        # score tie (0.7) broken by prior: the higher-prior, larger cui wins
+        ("alpha", "alpha", "C_A1", 0.0),
+        ("alpha", "alphas", "C_A2", 1.0),
+        # tie on score and prior broken by cui ascending
+        ("delta", "delta", "C_D2", 0.4),
+        ("delta", "delta", "C_D1", 0.4),
+        # duplicate alias rows for one key
+        ("omega", "omega", "C_O1", 0.8),
+        ("omega", "omega", "C_O1", 0.8),
+        ("omega", "omegas", "C_O2", 0.9),
+        # a score of exactly the 0.5 floor is accepted
+        ("beta", "betas", "C_B1", 0.5),
+        # no candidate clears the floor: the link is null
+        ("gamma", "zzz", "C_G1", 0.9),
+    ]
+    assert link_score("alpha", "alpha", 0.0) == link_score("alpha", "alphas", 1.0)
+    assert link_score("beta", "betas", 0.5) == 0.5
+    assert link_score("gamma", "zzz", 0.9) < 0.5
+    ts = dt.datetime(2026, 1, 1)
+    texts = ["Alpha inhibits delta. BETA activates gamma; omega treats alpha.",
+             "gamma causes Omega. delta prevents beta."]
+    hand = _in_pass_links_match_spark_resolution(
+        spark,
+        spark.createDataFrame(
+            [("h1", i, "user", t, None, ts) for i, t in enumerate(texts)],
+            TRANSCRIPTS_SCHEMA,
+        ),
+        spark.createDataFrame(rows, ALIASES_SCHEMA),
+    )
+    by_key = {}
+    for (key, _surface), cui in hand.items():
+        by_key.setdefault(key, set()).add(cui)
+    assert by_key == {"alpha": {"C_A2"}, "delta": {"C_D1"}, "omega": {"C_O1"},
+                      "beta": {"C_B1"}, "gamma": {None}}

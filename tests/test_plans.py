@@ -1,7 +1,7 @@
 """Physical-plan shape tests: the properties that make the pipeline viable at
 100 TB are asserted on the plans themselves, not just the outputs.
 
-- linking joins must be broadcast (no shuffle of the mention-sized side)
+- the KG outputs read the linked extraction: no join, one Arrow pass
 - canonicalization must be the salted two-phase aggregate
 - stage [1] must shuffle exactly once (repartition satisfies the window)
 - parquet scans must receive pushed filters / pruned columns
@@ -32,18 +32,27 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_linking_joins_are_broadcast(kg):
-    plan = _plan(kg.kg_edges)
-    assert "BroadcastHashJoin" in plan
-    # the transcript-sized side must NOT go through a sort-merge join
-    assert "SortMergeJoin" not in plan
+def test_kg_plans_link_in_extraction_pass(kg):
+    """Linking happens inside the extraction's mapInArrow: the outputs run
+    no join (broadcast or sort-merge) and no pandas-UDF scoring stage, and
+    the assembly repartition is the only exchange below the cached
+    extraction."""
+    for name in ("kg_edges", "kg_edge_stats", "kg_nodes"):
+        plan = _plan(getattr(kg, name))
+        assert "Join" not in plan, (name, plan)
+        assert "SortMergeJoin" not in plan, (name, plan)
+        assert "ArrowEvalPython" not in plan, (name, plan)
+        assert plan.count("MapInArrow") == 1, (name, plan)
+    unified = _plan(kg.unified)
+    assert unified.count("Exchange") == 1, unified
+    assert "Exchange hashpartitioning(conv_id" in unified, unified
 
 
 def test_canonicalization_is_salted_two_phase(kg, spark):
     """Row-level canonicalize_nodes (checkpoint-runner path) stays salted
-    two-phase; build_kg's kg_nodes instead rides the vocab-sized
-    mention_stats aggregate — its plan must show the map-side-combined
-    (partial) count and NO transcript-sized second read."""
+    two-phase; build_kg's kg_nodes instead aggregates the collapsed,
+    already-linked stat rows of the extraction — its plan must show the
+    map-side-combined (partial) aggregate and no join."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
         canonicalize_nodes,
     )
@@ -60,8 +69,8 @@ def test_canonicalization_is_salted_two_phase(kg, spark):
 
     nodes_plan = _plan(kg.kg_nodes)
     assert "partial_count" in nodes_plan or "partial" in nodes_plan, nodes_plan
-    # the vocab-sized join side is broadcast
-    assert "BroadcastHashJoin" in nodes_plan
+    # the cui rides the extraction rows: no join feeds the node aggregate
+    assert "Join" not in nodes_plan, nodes_plan
 
 
 def test_turn_assembly_single_shuffle(spark, fixture_dir):

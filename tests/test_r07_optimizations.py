@@ -103,6 +103,29 @@ def test_array_jaccard_verify_equals_join_verify(spark):
     assert new.count() > 0  # the comparison is not vacuous
 
 
+def test_array_jaccard_verify_drops_disjoint_pairs_at_zero_threshold(spark):
+    """At threshold 0.0 a pair sharing no shingle has Jaccard 0.0 >= 0; the
+    join-based verify never produces it (its inner join needs a shared
+    shingle), so the array verify must drop it too."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
+        array_jaccard_verify,
+        jaccard_verify,
+        with_shingles,
+    )
+
+    texts = ["alpha beta gamma delta", "alpha beta gamma zeta", "other words entirely"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sh = with_shingles(docs, n=3)
+    pairs = spark.createDataFrame([(0, 1), (0, 2), (1, 2)], "id_a long, id_b long")
+    stats = sh.groupBy("id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_list(F.xxhash64("shingle")).alias("hs"),
+    )
+    old = sorted(jaccard_verify(pairs, sh, threshold=0.0).collect())
+    new = sorted(array_jaccard_verify(pairs, stats, threshold=0.0).collect())
+    assert new == old and [(r["id_a"], r["id_b"]) for r in new] == [(0, 1)]
+
+
 def test_vocab_lut_wide_span_family():
     # 12 distinct span lengths: would overflow the old uint8 LUT (bit 8+)
     import numpy as np

@@ -123,8 +123,9 @@ def test_tableio_iceberg_branch_contract(spark, tmp_path):
 
 def test_alias_broadcast_file_backed_escape_hatch(spark, fixture_dir, tmp_path):
     """Above max_broadcast_keys the dictionary never rides the driver: the
-    index is built per-worker from an executor-written parquet side-file, and
-    the extraction output is IDENTICAL to the broadcast path."""
+    index is built per-worker from an executor-written parquet side-file of
+    (alias_key, cui, alias, prior) rows, and the extraction output and the
+    in-pass-linked KG tables are IDENTICAL to the broadcast path."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
         extract_all_df,
     )
@@ -151,6 +152,24 @@ def test_alias_broadcast_file_backed_escape_hatch(spark, fixture_dir, tmp_path):
     import pandas as pd
 
     pd.testing.assert_frame_equal(a, b)
+
+    # the spill carries the link candidates: the worker-built linker equals
+    # the broadcast one, and so do the KG tables built through it
+    import pyarrow.parquet as pq
+
+    spilled = next(tmp_path.rglob("*.parquet"))
+    assert pq.read_schema(spilled).names == ["alias_key", "cui", "alias", "prior"]
+    by_key = lambda idx: {k: sorted(v) for k, v in idx.candidates.items()}  # noqa: E731
+    assert by_key(fb.value) == by_key(bc.value)
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import build_kg
+
+    kg_a = build_kg(spark, transcripts, aliases, persist=False, alias_index=bc)
+    kg_b = build_kg(spark, transcripts, aliases, persist=False, alias_index=fb)
+    for name in ("kg_edges", "kg_edge_stats", "kg_nodes"):
+        rows_a = sorted(map(repr, getattr(kg_a, name).collect()))
+        rows_b = sorted(map(repr, getattr(kg_b, name).collect()))
+        assert rows_a == rows_b and rows_a, name
 
 
 def test_values_df_matches_createdataframe(spark):

@@ -21,12 +21,12 @@ changes). What to look for, per the scale-design goals:
   bucketed writer lands exactly one file per bucket.
 - `WindowGroupLimit` — Spark's top-k pushdown replaces full window sorts for
   stage [1] dedup and every per-group top-k.
-- `BroadcastHashJoin` everywhere a dimension or resolution table joins the
-  data path; no `SortMergeJoin` touches transcript-sized inputs.
-- kg_nodes rides the vocabulary-sized mention_stats aggregate: a
-  map-side-combined (partial_count) groupBy then a broadcast join — the
-  salted two-phase shape lives in the checkpoint runner's row-level
-  canonicalize (see its section below).
+- kg_edges and kg_nodes contain no join: the extraction `MapInArrow` links
+  mentions and triple endpoints in-task, so kg_edges is a filter + projection
+  and kg_nodes one map-side-combined (partial) groupBy(cui) — the salted
+  two-phase shape lives in the checkpoint runner's row-level canonicalize
+  (see its section below). `BroadcastHashJoin` is where a dimension table
+  joins the data path; no `SortMergeJoin` touches transcript-sized inputs.
 - Scans show `PushedFilters` and pruned `ReadSchema`.
 
 """
@@ -65,8 +65,8 @@ def main() -> None:
 
     sf = "/root/testdata/sf0.001"
     sections = [
-        ("kg_edges (stages [1]-[5]: window -> single-pass extraction -> broadcast resolution joins)", kg.kg_edges),
-        ("kg_nodes (stage [6]: vocab-sized stats aggregate -> broadcast join)", kg.kg_nodes),
+        ("kg_edges (stages [1]-[5]: window -> single-pass extraction + in-pass linking -> filter)", kg.kg_edges),
+        ("kg_nodes (stage [6]: groupBy(cui) over the linked, collapsed stat rows)", kg.kg_nodes),
         ("canonicalize_nodes (row-level salted two-phase, checkpoint-runner path)", _salted_nodes(kg)),
         ("q1_pricing_summary (pushdown + partial aggregation)", REGISTRY["q1_pricing_summary"][0](spark, sf)),
         ("q5_join_breadth (broadcast star join)", REGISTRY["q5_join_breadth"][0](spark, sf)),
