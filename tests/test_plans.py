@@ -5,9 +5,13 @@
 - canonicalization must be the salted two-phase aggregate
 - stage [1] must shuffle exactly once (repartition satisfies the window)
 - parquet scans must receive pushed filters / pruned columns
+- minhash_dedup must scan, shingle and shuffle the corpus once, from a plan
+  built in a few hundred py4j round trips
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +19,7 @@ from pyspark.sql import functions as F
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
     canonicalize_nodes,
 )
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import minhash_dedup
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.turn_assembly import (
     assemble_turns,
 )
@@ -88,6 +93,46 @@ def test_scan_pushdown(spark):
     plan = _plan(df)
     assert "PushedFilters: [IsNotNull(l_orderkey), EqualTo(l_orderkey,42)]" in plan
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
+
+
+DOCS = "/root/testdata/sf0.001/documents.parquet"
+
+
+@pytest.mark.parametrize("family", ["md5", "xxhash64"])
+def test_minhash_dedup_one_scan_one_id_exchange(spark, family):
+    """The signature aggregate has one consumer: the executed (final AQE)
+    plan reads the corpus once and shuffles it by id once. A second
+    FileScan means a twin aggregate re-scans and re-shingles the corpus."""
+    df = minhash_dedup(spark.read.parquet(DOCS), family=family)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert final.count("FileScan") == 1, final
+    # exchange NODES only: a ReusedExchange line repeats the reused
+    # exchange's description after its own name
+    id_exchanges = re.findall(r"^[\s:|+-]*Exchange hashpartitioning\(id#", final, re.M)
+    assert len(id_exchanges) == 1, final
+
+
+@pytest.mark.parametrize("family", ["md5", "xxhash64"])
+def test_minhash_dedup_plan_construction_budget(spark, family):
+    """Building (not running) minhash_dedup sends at most 400 py4j commands
+    to the JVM: the plan is assembled from SQL strings, not one Column
+    object per node."""
+    docs = spark.read.parquet(DOCS)
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counting(*a, **k):
+        calls[0] += 1
+        return send(*a, **k)
+
+    client.send_command = counting
+    try:
+        minhash_dedup(docs, family=family)
+    finally:
+        del client.send_command
+    assert calls[0] <= 400, calls[0]
 
 
 def test_hot_entity_skew_bounded(spark, fixture_dir, tables):

@@ -68,6 +68,44 @@ def test_minhash_contains_exact_dups(spark, docs):
     assert all(pairs["jaccard"] <= 1.0) and all(pairs["jaccard"] >= 0.6)
 
 
+@pytest.mark.parametrize("family", ["md5", "xxhash64"])
+@pytest.mark.parametrize("max_bucket", [None, 2])
+def test_minhash_dedup_equals_composed_public_pieces(spark, docs, family, max_bucket):
+    """minhash_dedup scores pairs on the band join from carried hash arrays;
+    it must return exactly what the public pieces composed by hand return:
+    signatures -> lsh_candidate_pairs -> join-based jaccard_verify on the
+    string shingles. The corpus adds empty and whitespace-only text, a null
+    text, texts under 3 tokens, identical pairs and a hot bucket of five
+    identical docs (capped when max_bucket=2)."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
+        jaccard_verify,
+    )
+
+    extra = [
+        (900_000, ""), (900_001, "   "), (900_002, None),
+        (900_003, "two words"), (900_004, "two words"), (900_005, "one"),
+        (900_006, "a near duplicate of some text with a tail"),
+        (900_007, "a near duplicate of some text with a different tail"),
+        (900_008, "a near duplicate of some text with a tail"),
+    ] + [(910_000 + i, "the same hot boilerplate in every copy") for i in range(5)]
+    corpus = docs.limit(60).select("doc_id", "text").unionByName(
+        spark.createDataFrame(extra, "doc_id long, text string")
+    )
+    sh = with_shingles(corpus)
+    signed = sh.withColumn("shingle", F.xxhash64("shingle")) if family == "xxhash64" else sh
+    sigs = minhash_signatures(signed, family=family)
+    for bands in (4, 8):
+        cand = lsh_candidate_pairs(sigs, bands=bands, max_bucket=max_bucket)
+        for threshold in (0.0, 0.7):
+            got = minhash_dedup(corpus, bands=bands, threshold=threshold, family=family,
+                                max_bucket=max_bucket).collect()
+            want = jaccard_verify(cand, sh, threshold).collect()
+            assert len(got) == len(set(got)), (bands, threshold)
+            assert sorted(got) == sorted(want), (bands, threshold)
+            ids = {(r["id_a"], r["id_b"]) for r in got}
+            assert {(900_003, 900_004), (900_006, 900_008), (910_000, 910_004)} <= ids
+
+
 def test_minhash_signature_determinism(spark, docs):
     sh = with_shingles(docs.limit(20))
     s1 = minhash_signatures(sh).toPandas().sort_values("id").reset_index(drop=True)
