@@ -8,11 +8,16 @@ reference biomedical RAG pipeline
     transcripts (conv_id, turn_idx, role, text, tool, ts)
       -> [1] turn assembly        (stable window ordering per conversation)
       -> [2] mention detection    (vectorized sentence split + dictionary match)
-      -> [3] triple extraction    (pattern SVO over sentences, pandas UDF)
-      -> [4] candidate generation (broadcast alias join)
-      -> [5] link scoring         (ngram/prior scoring + per-mention top-k)
-      -> [6] canonicalization     (salted groupBy cui -> nodes, CUI-resolved edges)
+      -> [3] triple extraction    (pattern SVO over sentences)
+      -> [4] candidate generation (broadcast alias dictionary lookup)
+      -> [5] link scoring         (ngram/prior scoring, top-1 over the floor)
+             [2]-[5] run in ONE mapInArrow pass: linking happens in-task
+      -> [6] canonicalization     (groupBy cui -> nodes; linked triples -> edges)
       -> [7] materialization      (parquet/Iceberg tables + lineage, resumable)
+
+    plans.pipeline.build_kg is the only composition of [1]-[6]: the
+    checkpointed runner (plans.checkpoint) calls it per bucket group and
+    the streaming ingest (streaming.ingest) per micro-batch.
 
 Package map:
     core/       pure-Python semantics shared by Spark UDFs AND the pandas oracle

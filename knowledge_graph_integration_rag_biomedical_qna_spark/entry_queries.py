@@ -1518,7 +1518,7 @@ def kg_pipeline_full(spark, sf_dir):
 
 @_qm("kg_nodes_full")
 def kg_nodes_full(spark, sf_dir):
-    """Canonicalized node table of the flagship pipeline (salted groupBy)."""
+    """Canonicalized node table of the flagship pipeline (groupBy cui)."""
     from .plans.pipeline import build_kg
     from .sources.synth import synth_aliases, synth_transcripts
 
@@ -1852,8 +1852,8 @@ def kg_question_retrieval(spark, sf_dir):
 @_qm("kg_streaming_ingest")
 def kg_streaming_ingest(spark, sf_dir):
     """Structured-Streaming ingest of the SAME synthesized transcripts
-    (readStream file source, watermark + keyed dedup, foreachBatch extraction
-    + linking, availableNow trigger) — the resulting edge set must equal the
+    (readStream file source, watermark + keyed dedup, one build_kg per
+    foreachBatch micro-batch, availableNow trigger) — the resulting edge set must equal the
     BATCH pipeline edge-for-edge, because every stage is per-turn stateless
     and per-(alias_key,surface) scoring is a pure function. Oracle: the
     batch pipeline's independent pandas result. Reference analog: the
@@ -1905,10 +1905,11 @@ def kg_streaming_ingest(spark, sf_dir):
 @_qm("kg_checkpointed_run")
 def kg_checkpointed_run(spark, sf_dir):
     """The resumable checkpointed runner under the driver gate: bucket-group
-    materialization (atomic done markers, per-bucket lineage, salted node
-    partials) over the synthesized transcripts must produce EXACTLY the batch
-    pipeline's edge set — conversations never split across buckets and
-    linking is a pure per-(alias_key, surface) function. Oracle: the batch
+    materialization (one build_kg per bucket group, atomic done markers,
+    per-bucket lineage and node partials) over the synthesized transcripts
+    must produce EXACTLY the batch pipeline's edge set — conversations never
+    split across buckets and linking is a pure per-(alias_key, surface)
+    function. Oracle: the batch
     pipeline's independent pandas result. Reference analog: the per-query
     checkpoint/skip loop (provence/provence.py:113-167) as bucket commits."""
     import os

@@ -1,18 +1,22 @@
-"""Stage [6] — salted, skew-aware canonicalization into CUI nodes.
+"""Stage [6] — canonicalization into CUI nodes and deduplicated edges.
 
 North-rule requirement: hot-entity skew handled explicitly. A handful of
 aliases appear in >30% of turns (fixtures plant this; at 10^12 turns a hot CUI
-would receive billions of rows). A naive groupBy("cui") sends every mention of
-a hot CUI to one reducer. We do the classic two-phase salted aggregate
-(SURVEY.md §4 item 1):
+would receive billions of rows). Neither aggregate ships those rows to one
+reducer: both are map-side partial aggregates (SURVEY.md §4 item 1) whose
+shuffled payload is per-task partials, not occurrences:
 
-  phase 1: groupBy(cui, salt)  with salt = pmod(xxhash64(occurrence key), S)
-           -> partial collect_set(surface) + count       (S-way fan-out)
-  phase 2: groupBy(cui) over the <= S partials per cui   (tiny)
+  kg_nodes       groupBy(cui) over the linked mention rows: each task's
+                 partial collect_set(surface) + count meets the others in a
+                 vocab-sized final merge (the collapsed extraction already
+                 hands it per-task stat rows)
+  kg_edge_stats  groupBy(subj_cui, pred, obj_cui): counters only
 
-collect_set is safe to salt because surface vocabulary per CUI is small and
-set-union is associative/commutative; counts sum. The reference's analog of
-this whole stage is the pmid-keyed dict collapse (empty_abstract_filter.py:199-215).
+collect_set is safe to split because surface vocabulary per CUI is small and
+set-union is associative/commutative; counts sum. The checkpointed runner
+(plans.checkpoint) runs the node aggregate as the same two phases on disk:
+per-bucket partials, merged at finalize. The reference's analog of this whole
+stage is the pmid-keyed dict collapse (empty_abstract_filter.py:199-215).
 """
 
 from __future__ import annotations
@@ -20,40 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.config import CANON_SALT_BUCKETS
-
-
-def canonicalize_nodes(resolved_mentions: DataFrame, salt_buckets: int = CANON_SALT_BUCKETS) -> DataFrame:
-    """kg_nodes(cui, surfaces sorted array, mention_count) via salted 2-phase agg."""
-    salted = resolved_mentions.withColumn(
-        "_salt",
-        F.pmod(
-            F.xxhash64("conv_id", "turn_idx", "sent_idx", "mention_idx"),
-            F.lit(salt_buckets),
-        ),
-    )
-    partial = salted.groupBy("cui", "_salt").agg(
-        F.collect_set("surface").alias("_surfaces"),
-        F.count(F.lit(1)).alias("_cnt"),
-    )
-    return (
-        partial.groupBy("cui")
-        .agg(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_surfaces")))).alias("surfaces"),
-            F.sum("_cnt").alias("mention_count"),
-        )
-    )
-
 
 def aggregate_nodes(unified: DataFrame) -> DataFrame:
     """kg_nodes from a linked extraction (operators.extraction): one
     groupBy(cui) over its mention rows — collapsed 's' rows (vocab-sized per
-    task) or per-occurrence 'm' rows. Value-identical to `canonicalize_nodes`
-    over row-level resolved mentions (counts sum; surface sets union); the
-    map-side partial aggregate absorbs hot-CUI skew, so no salting is needed
-    here. This is the path used by plans.pipeline.build_kg;
-    `canonicalize_nodes` remains the row-level operator (checkpointed
-    per-bucket partial aggregates, tests)."""
+    task) or per-occurrence 'm' rows, which give the same counts and
+    surface sets; the map-side partial aggregate absorbs hot-CUI skew, so no
+    salting is needed. Used by plans.pipeline.build_kg."""
     from .extraction import MENTION_COUNT_SQL
 
     return (

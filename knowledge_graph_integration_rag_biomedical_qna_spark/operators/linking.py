@@ -1,13 +1,14 @@
 """Stages [4]+[5] as Spark operators — entity-link candidate generation and
 scoring.
 
-plans.pipeline.build_kg does not run these: its extraction pass links each
+No KG table is built with these: plans.pipeline.build_kg (and so the
+checkpointed runner and the streaming path, which call it) links each
 distinct (alias_key, surface) in-task through core.linking.resolve against
 the broadcast dictionary (operators.extraction). The Spark tables here serve
-the question linker (plans.query), the checkpointed runner
-(plans.checkpoint) and the streaming path (streaming.ingest), back
-build_kg's lazy `candidates`/`resolution` views, and are the reference the
-in-pass linker is tested against (tests/test_pipeline_parity.py).
+the question linker (plans.query, which needs the link score), back
+build_kg's lazy `candidates`/`resolution` views, time the linking layer in
+the benchmark trace (perfbench/trace.py), and are the reference the in-pass
+linker is tested against (tests/test_pipeline_parity.py).
 
 Dataflow (reference shape: retrieve -> rerank -> threshold,
 rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
@@ -22,9 +23,7 @@ rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
 4. per-surface top-k window with pinned tie-breaks (T1), top-1 + floor
    acceptance (A2 + the 0.5 cosine floor).
 
-The output `resolution` table is tiny (<= distinct surfaces); the paths that
-use it broadcast it back against their mentions/triples, so no
-transcript-sized table is shuffled for linking.
+The output `resolution` table is tiny (<= distinct surfaces).
 """
 
 from __future__ import annotations
@@ -90,28 +89,4 @@ def resolution_table(candidates: DataFrame) -> DataFrame:
     """Accepted top-1 links: (alias_key, surface, cui, score)."""
     return candidates.filter(f"rank = 1 AND score >= {LINK_ACCEPT_FLOOR!r}").select(
         "alias_key", "surface", "cui", "score"
-    )
-
-
-def resolve_mentions(mentions: DataFrame, resolution: DataFrame) -> DataFrame:
-    """Attach accepted CUIs to every mention occurrence (broadcast join)."""
-    return mentions.join(F.broadcast(resolution), ["alias_key", "surface"], "inner")
-
-
-def resolve_triples(raw_triples: DataFrame, resolution: DataFrame) -> DataFrame:
-    """CUI-resolve both endpoints of each raw triple (two broadcast joins);
-    triples with an unresolvable endpoint are dropped (same as oracle)."""
-    subj = resolution.selectExpr(
-        "alias_key AS subj_key", "surface AS subj_surface", "cui AS subj_cui"
-    )
-    obj = resolution.selectExpr(
-        "alias_key AS obj_key", "surface AS obj_surface", "cui AS obj_cui"
-    )
-    return (
-        raw_triples.join(F.broadcast(subj), ["subj_key", "subj_surface"], "inner")
-        .join(F.broadcast(obj), ["obj_key", "obj_surface"], "inner")
-        .select(
-            "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui",
-            "subj_surface", "obj_surface", "confidence",
-        )
     )

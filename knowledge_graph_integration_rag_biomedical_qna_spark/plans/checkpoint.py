@@ -6,12 +6,16 @@ engine that becomes:
 
 - the conversation space is hashed into CHECKPOINT_BUCKETS buckets
   (`pmod(xxhash64(conv_id), B)`) — the unit of commit and of resume;
-- buckets are processed in groups; each group's kg_edges / resolved mentions
-  partials land under `bucket=N` partition dirs, followed by an atomic done
-  marker (the Iceberg analog is a snapshot commit per group);
+- buckets are processed in groups; each group is one plans.pipeline.build_kg
+  call (the only composition of stages [1]-[6]) over its conversations, and
+  its kg_edges and node partials land under `bucket=N` partition dirs,
+  followed by an atomic done marker (the Iceberg analog is a snapshot commit
+  per group);
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
-- kg_nodes is finalized from the per-bucket partial aggregates, so the salted
-  two-phase aggregate and the checkpoint granularity are the same mechanism;
+- kg_nodes is finalized from per-bucket partials, a groupBy(bucket, cui) over
+  the group's linked mention rows, so the two-phase node aggregate and the
+  checkpoint granularity are the same mechanism; kg_edge_stats is
+  operators.canonicalize.aggregate_edges over all edges, as in build_kg;
 - a `lineage` table records (bucket, turns_in, mentions, triples, edges,
   wall_sec) per bucket — per-partition lineage + triple-count metrics.
 
@@ -28,16 +32,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.config import CANON_SALT_BUCKETS, CHECKPOINT_BUCKETS
-from ..operators.extraction import extract_all_df, mentions_view, triples_view
-from ..operators.linking import (
-    candidate_table,
-    resolution_table,
-    resolve_mentions,
-    resolve_triples,
-)
-from ..operators.turn_assembly import assemble_turns
-from .pipeline import broadcast_alias_keys
+from ..core.config import CHECKPOINT_BUCKETS
+from ..operators.canonicalize import aggregate_edges
+from .pipeline import broadcast_alias_keys, build_kg
 
 _BUCKET = "bucket"
 
@@ -117,7 +114,6 @@ class ResumableKGRun:
         _migrate_legacy_lineage(self.out_dir)
         done = _done_buckets(self.out_dir)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
-        aliases = aliases.cache()
 
         all_buckets = [b for b in range(self.buckets) if b not in done]
         groups = [
@@ -132,33 +128,14 @@ class ResumableKGRun:
         for grp in groups:
             t0 = time.time()
             part = bucketed.filter(F.col(_BUCKET).isin(list(grp)))
-            turns = assemble_turns(part)
-            turns = turns.persist()
-            unified = extract_all_df(turns, keys_bc).persist()
-            mentions = mentions_view(unified)
-            raw_triples = triples_view(unified)
-            surf = mentions.select("alias_key", "surface")
-            # persist: the pandas-UDF scoring subtree otherwise re-executes
-            # once per consuming broadcast (~5x per group: twice in
-            # resolve_triples, once in resolve_mentions, again for the
-            # lineage edge counts) — same reasoning as build_kg (r4 review)
-            resolution = resolution_table(candidate_table(surf, aliases)).persist()
-            edges = resolve_triples(raw_triples, resolution).withColumn(
-                _BUCKET, bucket_of("conv_id", self.buckets)
-            )
-            resolved = resolve_mentions(mentions, resolution)
-            # per-bucket partial node aggregate == phase 1 of the salted agg,
-            # with (bucket, salt) as the composite salt
+            # uncollapsed cache: every 'm' row keeps its conv_id, so nodes
+            # and lineage can be split by bucket
+            kg = build_kg(self.spark, part, aliases, alias_index=keys_bc, persist_mentions=True)
+            edges = kg.kg_edges.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
             node_partial = (
-                resolved.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
-                .withColumn(
-                    "_salt",
-                    F.pmod(
-                        F.xxhash64("conv_id", "turn_idx", "sent_idx", "mention_idx"),
-                        F.lit(CANON_SALT_BUCKETS),
-                    ),
-                )
-                .groupBy(_BUCKET, "cui", "_salt")
+                kg.unified.filter("kind = 'm' AND cui IS NOT NULL")
+                .withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
+                .groupBy(_BUCKET, "cui")
                 .agg(
                     F.collect_set("surface").alias("surfaces_partial"),
                     F.count(F.lit(1)).alias("cnt_partial"),
@@ -174,15 +151,15 @@ class ResumableKGRun:
 
             # lineage metrics for this group, one row per bucket
             lineage = (
-                turns.groupBy(_BUCKET)
+                kg.turns.groupBy(_BUCKET)
                 .agg(F.count(F.lit(1)).alias("turns_in"))
                 .join(
-                    mentions.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
+                    kg.mentions.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
                     .groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("mentions")),
                     _BUCKET, "left",
                 )
                 .join(
-                    raw_triples.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
+                    kg.raw_triples.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
                     .groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("raw_triples")),
                     _BUCKET, "left",
                 )
@@ -208,11 +185,9 @@ class ResumableKGRun:
             with open(tmp, "w") as fh:
                 json.dump({"buckets": list(grp), "wall_sec": round(time.time() - t0, 3)}, fh)
             os.replace(tmp, marker)
-            for df in (turns, unified, resolution):
-                df.unpersist()
+            kg.unpersist()
             processed.append(grp)
 
-        aliases.unpersist()  # r4 review: was leaked for the session lifetime
         return {
             "groups_processed": len(processed),
             "buckets_done": sorted(_done_buckets(self.out_dir)),
@@ -220,7 +195,8 @@ class ResumableKGRun:
         }
 
     def finalize(self) -> None:
-        """Phase-2 aggregate over all bucket partials -> kg_nodes + edge stats."""
+        """Merge the bucket node partials -> kg_nodes; aggregate_edges over
+        every bucket's edges -> kg_edge_stats (exact n_convs)."""
         partials = self.spark.read.parquet(os.path.join(self.out_dir, "node_partials"))
         nodes = (
             partials.groupBy("cui")
@@ -231,9 +207,4 @@ class ResumableKGRun:
         )
         nodes.write.mode("overwrite").parquet(os.path.join(self.out_dir, "kg_nodes"))
         edges = self.spark.read.parquet(os.path.join(self.out_dir, "kg_edges"))
-        stats = edges.groupBy("subj_cui", "pred", "obj_cui").agg(
-            F.count(F.lit(1)).alias("n_evidence"),
-            F.round(F.avg("confidence"), 6).alias("avg_confidence"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-        )
-        stats.write.mode("overwrite").parquet(os.path.join(self.out_dir, "kg_edge_stats"))
+        aggregate_edges(edges).write.mode("overwrite").parquet(os.path.join(self.out_dir, "kg_edge_stats"))

@@ -7,10 +7,11 @@ stages running under Structured Streaming for continuous ingest:
   swap the format, the plan is identical),
 - `withWatermark("ts", ...)` + `dropDuplicates(["conv_id","turn_idx"])` for
   late/duplicate turns (the streaming analog of stage [1]'s first-wins dedup),
-- stages [2]-[5] are stateless per turn, so they run unchanged inside
-  `foreachBatch`, appending evidence-level edges per micro-batch; the
-  canonicalization groupBy stays a periodic batch compaction over the appended
-  edges (exactly the checkpointed phase-2 finalize).
+- each micro-batch is one plans.pipeline.build_kg call (persist=False, the
+  dictionary shipped once for the whole stream): stages [1]-[5] are per-turn
+  stateless, so its kg_edges are appended per micro-batch unchanged; the
+  edge-stats and node groupBys stay a periodic batch compaction over the
+  appended edges (as the checkpointed runner's finalize does).
 
 Exactly-once: foreachBatch + idempotent per-epoch parquet dirs, plus the
 streaming checkpointLocation for source offsets.
@@ -23,8 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extraction import extract_triples_df
-from ..operators.linking import candidate_table, resolution_table, resolve_triples
+from ..plans.pipeline import build_kg
 from ..sources.io import TRANSCRIPTS_SCHEMA
 
 
@@ -74,11 +74,9 @@ def start_kg_stream(
     os.makedirs(out_dir, exist_ok=True)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        raw = extract_triples_df(batch_df, keys_bc)
-        surf = raw.select(F.col("subj_key").alias("alias_key"), F.col("subj_surface").alias("surface")) \
-            .unionByName(raw.select(F.col("obj_key").alias("alias_key"), F.col("obj_surface").alias("surface")))
-        resolution = resolution_table(candidate_table(surf, aliases))
-        edges = resolve_triples(raw, resolution).withColumn("epoch", F.lit(epoch_id))
+        edges = build_kg(
+            spark, batch_df, aliases, alias_index=keys_bc, persist=False
+        ).kg_edges.withColumn("epoch", F.lit(epoch_id))
         # foreachBatch is AT-LEAST-ONCE: an epoch replayed after a crash
         # between the sink write and the offset commit must land in the SAME
         # place, not append a second copy (r4 review — the docstring's

@@ -1,8 +1,12 @@
 """Kill-and-resume test (SURVEY.md §5): run the checkpointed materialization,
 abort after m of n bucket groups, resume, and require the final tables to be
-identical to a single-shot run. Also checks lineage metrics coverage."""
+identical to a single-shot run and to one build_kg over the same input. Also
+checks lineage metrics coverage and the lost-marker failure model."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -10,19 +14,9 @@ import pytest
 from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
     ResumableKGRun,
 )
+from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import build_kg
 
-TRIPLE_KEY = ["conv_id", "turn_idx", "subj_cui", "pred", "obj_cui"]
-
-
-def _edges(spark, out_dir) -> pd.DataFrame:
-    return (
-        spark.read.parquet(f"{out_dir}/kg_edges")
-        .drop("bucket")
-        .toPandas()
-        .sort_values(TRIPLE_KEY + ["subj_surface", "obj_surface"])
-        .reset_index(drop=True)
-    )
-
+KG_TABLES = ("kg_edges", "kg_nodes", "kg_edge_stats")
 
 @pytest.fixture(scope="module")
 def inputs(spark, fixture_dir):
@@ -32,10 +26,87 @@ def inputs(spark, fixture_dir):
     )
 
 
-def test_resume_produces_identical_tables(spark, inputs, tmp_path):
+def _table(df) -> pd.DataFrame:
+    """A KG table as a row-order-free pandas frame: surfaces arrays become
+    tuples, rows sort on every column."""
+    pdf = df.toPandas()
+    if "surfaces" in pdf:
+        pdf["surfaces"] = pdf["surfaces"].map(tuple)
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def _written(spark, out_dir) -> dict[str, pd.DataFrame]:
+    return {
+        name: _table(spark.read.parquet(f"{out_dir}/{name}").drop("bucket"))
+        for name in KG_TABLES
+    }
+
+
+@pytest.fixture(scope="module")
+def resumed_run(spark, inputs, tmp_path_factory) -> str:
+    """Output dir of a run crashed after 2 of 4 bucket groups, resumed, then
+    finalized."""
+    transcripts, aliases = inputs
+    out = str(tmp_path_factory.mktemp("ckpt") / "resumed")
+    s1 = ResumableKGRun(spark, out, buckets=8, group_size=2).run(
+        transcripts, aliases, max_groups=2
+    )
+    assert s1["groups_processed"] == 2 and not s1["complete"]
+    assert len(s1["buckets_done"]) == 4
+    # resume: picks up exactly the remaining buckets
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    s2 = run.run(transcripts, aliases)
+    assert s2["groups_processed"] == 2 and s2["complete"]
+    run.finalize()
+    return out
+
+
+def test_resumed_run_equals_build_kg(spark, inputs, resumed_run):
+    """The runner composes the KG through build_kg: after a crash and a
+    resume, every column of kg_edges, kg_nodes (surfaces included) and
+    kg_edge_stats (exact n_convs included) equals one build_kg."""
+    transcripts, aliases = inputs
+    kg = build_kg(spark, transcripts, aliases)
+    try:
+        want = {name: _table(getattr(kg, name)) for name in KG_TABLES}
+    finally:
+        kg.unpersist()
+    got = _written(spark, resumed_run)
+    assert len(want["kg_edges"]) > 0 and len(want["kg_nodes"]) > 0
+    for name, w in want.items():
+        pd.testing.assert_frame_equal(got[name][list(w.columns)], w, check_exact=True, obj=name)
+
+
+def test_lost_marker_reprocesses_one_group(spark, inputs, resumed_run, tmp_path):
+    """Crash after a group's data and lineage writes but before its done
+    marker: the rerun processes exactly that group, and its overwrites leave
+    the tables and the lineage unchanged (no double counting)."""
+    transcripts, aliases = inputs
+    out = str(tmp_path / "lost_marker")
+    shutil.copytree(resumed_run, out)
+
+    def lineage():
+        lin = spark.read.parquet(f"{out}/lineage").toPandas()
+        return len(lin), int(lin["edges"].sum())
+
+    before, lineage_before = _written(spark, out), lineage()
+    markers = sorted(f for f in os.listdir(f"{out}/_done") if f.endswith(".json"))
+    assert len(markers) == 4, markers
+    os.remove(f"{out}/_done/{markers[1]}")
+
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    s = run.run(transcripts, aliases)
+    assert s["groups_processed"] == 1 and s["complete"], s
+    run.finalize()
+    after = _written(spark, out)
+    for name in ("kg_edges", "kg_nodes"):
+        pd.testing.assert_frame_equal(after[name], before[name], check_exact=True, obj=name)
+    assert lineage() == lineage_before
+
+
+def test_resume_produces_identical_tables(spark, inputs, resumed_run, tmp_path):
     transcripts, aliases = inputs
     single = str(tmp_path / "single")
-    resumed = str(tmp_path / "resumed")
 
     # single-shot run
     run1 = ResumableKGRun(spark, single, buckets=8, group_size=2)
@@ -43,26 +114,12 @@ def test_resume_produces_identical_tables(spark, inputs, tmp_path):
     assert s["complete"]
     run1.finalize()
 
-    # crashed run: only 2 of 4 groups committed
-    run2 = ResumableKGRun(spark, resumed, buckets=8, group_size=2)
-    s1 = run2.run(transcripts, aliases, max_groups=2)
-    assert not s1["complete"] and len(s1["buckets_done"]) == 4
-
-    # resume: picks up exactly the remaining buckets
-    s2 = ResumableKGRun(spark, resumed, buckets=8, group_size=2).run(transcripts, aliases)
-    assert s2["complete"]
-    ResumableKGRun(spark, resumed, buckets=8, group_size=2).finalize()
-
-    e1, e2 = _edges(spark, single), _edges(spark, resumed)
-    pd.testing.assert_frame_equal(e1, e2)
-
-    n1 = spark.read.parquet(f"{single}/kg_nodes").toPandas().sort_values("cui").reset_index(drop=True)
-    n2 = spark.read.parquet(f"{resumed}/kg_nodes").toPandas().sort_values("cui").reset_index(drop=True)
-    assert n1["cui"].tolist() == n2["cui"].tolist()
-    assert n1["mention_count"].tolist() == n2["mention_count"].tolist()
+    want, got = _written(spark, single), _written(spark, resumed_run)
+    for name, w in want.items():
+        pd.testing.assert_frame_equal(got[name], w, check_exact=True, obj=name)
 
     # rerun on a complete output is a no-op
-    s3 = ResumableKGRun(spark, resumed, buckets=8, group_size=2).run(transcripts, aliases)
+    s3 = ResumableKGRun(spark, resumed_run, buckets=8, group_size=2).run(transcripts, aliases)
     assert s3["groups_processed"] == 0 and s3["complete"]
 
 

@@ -2,7 +2,7 @@
 100 TB are asserted on the plans themselves, not just the outputs.
 
 - the KG outputs read the linked extraction: no join, one Arrow pass
-- canonicalization must be the salted two-phase aggregate
+- kg_nodes must be a map-side partial aggregate with no join
 - stage [1] must shuffle exactly once (repartition satisfies the window)
 - parquet scans must receive pushed filters / pruned columns
 - minhash_dedup must scan, shingle and shuffle the corpus once, from a plan
@@ -16,9 +16,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
-    canonicalize_nodes,
-)
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import minhash_dedup
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.turn_assembly import (
     assemble_turns,
@@ -53,25 +50,10 @@ def test_kg_plans_link_in_extraction_pass(kg):
     assert "Exchange hashpartitioning(conv_id" in unified, unified
 
 
-def test_canonicalization_is_salted_two_phase(kg, spark):
-    """Row-level canonicalize_nodes (checkpoint-runner path) stays salted
-    two-phase; build_kg's kg_nodes instead aggregates the collapsed,
-    already-linked stat rows of the extraction — its plan must show the
-    map-side-combined (partial) aggregate and no join."""
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
-        canonicalize_nodes,
-    )
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
-        resolve_mentions,
-    )
-
-    salted_plan = _plan(canonicalize_nodes(resolve_mentions(kg.mentions, kg.resolution)))
-    assert "_salt" in salted_plan, "salted partial aggregate missing"
-    assert (
-        salted_plan.count("HashAggregate") >= 2
-        or salted_plan.count("ObjectHashAggregate") >= 2
-    )
-
+def test_kg_nodes_partial_aggregate_no_join(kg):
+    """build_kg's kg_nodes aggregates the collapsed, already-linked stat rows
+    of the extraction: its plan must show the map-side-combined (partial)
+    aggregate and no join."""
     nodes_plan = _plan(kg.kg_nodes)
     assert "partial_count" in nodes_plan or "partial" in nodes_plan, nodes_plan
     # the cui rides the extraction rows: no join feeds the node aggregate
@@ -133,33 +115,6 @@ def test_minhash_dedup_plan_construction_budget(spark, family):
     finally:
         del client.send_command
     assert calls[0] <= 400, calls[0]
-
-
-def test_hot_entity_skew_bounded(spark, fixture_dir, tables):
-    """Hot-alias fixture: top alias appears in a large share of mentions; the
-    salted partial agg must spread each hot CUI over multiple salt buckets."""
-    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
-    kg = build_kg(spark, transcripts, aliases, persist=False)
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
-        resolve_mentions,
-    )
-
-    resolved = resolve_mentions(kg.mentions, kg.resolution)
-    salted_counts = (
-        resolved.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64("conv_id", "turn_idx", "sent_idx", "mention_idx"), F.lit(16)),
-        )
-        .groupBy("cui", "_salt")
-        .count()
-        .groupBy("cui")
-        .agg(F.count(F.lit(1)).alias("n_buckets"), F.sum("count").alias("n_mentions"))
-        .orderBy(F.col("n_mentions").desc())
-        .first()
-    )
-    # the hottest CUI must be spread across many salt buckets (>= 8 of 16)
-    assert salted_counts["n_buckets"] >= 8, salted_counts
 
 
 def test_kg_query_cli_smoke(spark, fixture_dir, tmp_path, capsys, monkeypatch):

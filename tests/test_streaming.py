@@ -1,8 +1,11 @@
 """Structured Streaming ingest test: file-source micro-batches produce the
 same evidence-level edges as the batch pipeline, with duplicate turns dropped
-by the watermark+dropDuplicates stage."""
+by the watermark+dropDuplicates stage, and a replayed epoch changes nothing."""
 
 from __future__ import annotations
+
+import os
+import time
 
 import pandas as pd
 
@@ -17,44 +20,79 @@ from knowledge_graph_integration_rag_biomedical_qna_spark.streaming.ingest impor
 TRIPLE_KEY = ["conv_id", "turn_idx", "subj_cui", "pred", "obj_cui"]
 
 
+EDGE_COLS = TRIPLE_KEY + ["subj_surface", "obj_surface", "confidence"]
+
+
+def _stream_edges(spark, out) -> pd.DataFrame:
+    return (
+        spark.read.parquet(f"{out}/kg_edges_stream")
+        .toPandas()
+        .sort_values(EDGE_COLS + ["epoch"])
+        .reset_index(drop=True)
+    )
+
+
+def _data_epochs(q) -> list[int]:
+    return [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+
 def test_stream_matches_batch(spark, fixture_dir, tables, tmp_path):
-    # stage the transcripts as multiple files to force several micro-batches,
-    # and append a duplicate copy of some turns (at-least-once delivery)
+    # nine files at 4 per trigger: three data micro-batches, with duplicates
+    # of the first 50 turns arriving again in the second one (at-least-once
+    # delivery); mtimes pin the order the file source picks them up in
     src = tmp_path / "stream_src"
     src.mkdir()
     t = tables["transcripts"]
-    third = len(t) // 3
-    t.iloc[:third].to_parquet(src / "part-0.parquet", index=False)
-    t.iloc[third : 2 * third].to_parquet(src / "part-1.parquet", index=False)
-    t.iloc[2 * third :].to_parquet(src / "part-2.parquet", index=False)
-    # duplicates of the first 50 turns arrive again in a later file
-    t.iloc[:50].to_parquet(src / "part-3-dupes.parquet", index=False)
+    n_parts = 8
+    bounds = [len(t) * k // n_parts for k in range(n_parts + 1)]
+    parts = [t.iloc[a:b] for a, b in zip(bounds, bounds[1:])]
+    parts.insert(4, t.iloc[:50])
+    base = time.time() - len(parts)
+    for k, part in enumerate(parts):
+        f = src / f"part-{k:02d}.parquet"
+        part.to_parquet(f, index=False)
+        os.utime(f, (base + k, base + k))
 
     aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
     keys_bc = broadcast_alias_keys(spark, aliases)
     out = str(tmp_path / "stream_out")
-    q = start_kg_stream(spark, str(src), out, aliases, keys_bc, trigger_available_now=True)
-    q.awaitTermination(timeout=300)
 
-    got = (
-        spark.read.parquet(f"{out}/kg_edges_stream")
-        .drop("epoch")
-        .toPandas()
-        .drop_duplicates()  # dupes across epochs impossible; belt and braces
-        .sort_values(TRIPLE_KEY + ["subj_surface", "obj_surface"])
-        .reset_index(drop=True)
-    )
+    def run_stream():
+        # watermark wider than the fixture's ts span: no turn is late, so the
+        # micro-batch split cannot change the edge set
+        q = start_kg_stream(spark, str(src), out, aliases, keys_bc,
+                            trigger_available_now=True, watermark="3650 days")
+        q.awaitTermination(timeout=300)
+        return q
+
+    epochs = _data_epochs(run_stream())
+    assert len(epochs) >= 3, epochs
+    got = _stream_edges(spark, out)
 
     transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
     want = (
-        build_kg(spark, transcripts, aliases)
+        build_kg(spark, transcripts, aliases, persist=False)
         .kg_edges.toPandas()
-        .sort_values(TRIPLE_KEY + ["subj_surface", "obj_surface"])
+        .sort_values(EDGE_COLS)
         .reset_index(drop=True)
     )
+    assert len(want) > 0
     pd.testing.assert_frame_equal(
-        got[TRIPLE_KEY].reset_index(drop=True), want[TRIPLE_KEY].reset_index(drop=True)
+        got[EDGE_COLS].sort_values(EDGE_COLS).reset_index(drop=True), want, check_exact=True
     )
+
+    # epoch replay: the last data epoch N wrote its edges, but its commit
+    # (and everything after it) is lost; the restart re-runs N, whose
+    # per-epoch overwrite must leave the table unchanged row for row
+    last = max(epochs)
+    chk = os.path.join(out, "_chk")
+    for log in ("commits", "offsets"):
+        for f in os.listdir(os.path.join(chk, log)):
+            n = int(f.lstrip(".").split(".")[0])
+            if n > last or (log == "commits" and n == last):
+                os.remove(os.path.join(chk, log, f))
+    assert last in _data_epochs(run_stream())
+    pd.testing.assert_frame_equal(_stream_edges(spark, out), got, check_exact=True)
 
 
 def test_stateful_conversation_progress(spark, tables, tmp_path):

@@ -23,10 +23,10 @@ changes). What to look for, per the scale-design goals:
   stage [1] dedup and every per-group top-k.
 - kg_edges and kg_nodes contain no join: the extraction `MapInArrow` links
   mentions and triple endpoints in-task, so kg_edges is a filter + projection
-  and kg_nodes one map-side-combined (partial) groupBy(cui) — the salted
-  two-phase shape lives in the checkpoint runner's row-level canonicalize
-  (see its section below). `BroadcastHashJoin` is where a dimension table
-  joins the data path; no `SortMergeJoin` touches transcript-sized inputs.
+  and kg_nodes one map-side-combined (partial) groupBy(cui). The checkpointed
+  runner and the streaming ingest call the same build_kg, so these plans are
+  theirs too. `BroadcastHashJoin` is where a dimension table joins the data
+  path; no `SortMergeJoin` touches transcript-sized inputs.
 - Scans show `PushedFilters` and pruned `ReadSchema`.
 
 """
@@ -48,16 +48,6 @@ def main() -> None:
     al = spark.read.parquet(f"{fixtures}/concept_aliases.parquet")
     kg = build_kg(spark, tr, al, persist=False)
 
-    def _salted_nodes(kg):
-        from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
-            canonicalize_nodes,
-        )
-        from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
-            resolve_mentions,
-        )
-
-        return canonicalize_nodes(resolve_mentions(kg.mentions, kg.resolution))
-
     def fmt(df):
         return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -67,7 +57,6 @@ def main() -> None:
     sections = [
         ("kg_edges (stages [1]-[5]: window -> single-pass extraction + in-pass linking -> filter)", kg.kg_edges),
         ("kg_nodes (stage [6]: groupBy(cui) over the linked, collapsed stat rows)", kg.kg_nodes),
-        ("canonicalize_nodes (row-level salted two-phase, checkpoint-runner path)", _salted_nodes(kg)),
         ("q1_pricing_summary (pushdown + partial aggregation)", REGISTRY["q1_pricing_summary"][0](spark, sf)),
         ("q5_join_breadth (broadcast star join)", REGISTRY["q5_join_breadth"][0](spark, sf)),
         ("ann_cosine_topk (JVM-side vector math + WindowGroupLimit top-k)", REGISTRY["ann_cosine_topk"][0](spark, sf)),
